@@ -2229,8 +2229,6 @@ def neardup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the union recursively, and re-derives every flag independently.",
 )
 def dedup_stage_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     d = load_table(spark, sf_dir, "documents")
     sh_pairs = _simhash_pair_tier(spark, sf_dir).select("id_a", "id_b")
     mh_pairs = _mh_consensus_pairs(spark, sf_dir)

@@ -116,7 +116,13 @@ _STATE_TABLES = ("frontier", "seen", "manifest", "errors", "documents")
 # round-1 full-seen rewrite was the one checkpoint cost that grew with
 # crawl history (O(10^10) per round at the design point).
 _MUTABLE_TABLES = ("frontier", "blooms")
-_MUTABLE_SCHEMAS = {"blooms": bloom.BLOOM_DDL}
+# read back with these schemas, never inferred: inference is a Spark job per
+# read (after every commit and on resume), and an all-retries round can
+# leave a table empty (no part files), which inference cannot read
+_MUTABLE_SCHEMAS = {
+    "frontier": FRONTIER_SCHEMA,
+    "blooms": bloom.BLOOM_DDL,
+}
 _APPEND_TABLES = ("seen", "manifest", "errors", "documents")
 
 _APPEND_SCHEMAS = {
@@ -380,12 +386,9 @@ class CrawlEngine:
         rdir = self._round_dir(rnd)
         state: dict[str, DataFrame] = {}
         for name in _MUTABLE_TABLES:
-            reader = self.spark.read
-            if name in _MUTABLE_SCHEMAS:
-                # explicit schema: an all-retries round can leave this table
-                # empty (no part files), breaking inference
-                reader = reader.schema(_MUTABLE_SCHEMAS[name])
-            state[name] = reader.parquet(os.path.join(rdir, name))
+            state[name] = self.spark.read.schema(_MUTABLE_SCHEMAS[name]).parquet(
+                os.path.join(rdir, name)
+            )
         delta_dirs = {
             name: [
                 os.path.join(self._round_dir(r), f"{name}_delta")
@@ -532,6 +535,35 @@ class CrawlEngine:
                 rows, "host string, r_prefixes array<string>, r_rps double"
             )
 
+        try:
+            state = self._run_rounds(
+                state, start_round, seen_store, robots_dim, robots_default
+            )
+        finally:
+            # a round releases its probe/rank frames when it commits; this
+            # covers the empty-frontier break and a failed round, so no frame
+            # stays registered past this session
+            bloom.release_persisted()
+            ranking.release_persisted()
+
+        final_round = self.latest_committed_round()
+        return {
+            "final_round": final_round,
+            "metrics": self.metrics.rounds,
+            "state": state,
+        }
+
+    def _run_rounds(
+        self,
+        state: dict[str, DataFrame],
+        start_round: int,
+        seen_store: DataFrame,
+        robots_dim: DataFrame | None,
+        robots_default: tuple[list[str], float] | None,
+    ) -> dict[str, DataFrame]:
+        """Rounds ``start_round``.. until max_rounds or an empty frontier;
+        returns the state read back from the last commit."""
+        cfg = self.cfg
         for rnd in range(start_round, cfg.max_rounds):
             t0 = time.time()
             frontier, seen = state["frontier"], state["seen"]
@@ -789,10 +821,4 @@ class CrawlEngine:
                 flagged_page.unpersist()
             bloom.release_persisted()
             ranking.release_persisted()
-
-        final_round = self.latest_committed_round()
-        return {
-            "final_round": final_round,
-            "metrics": self.metrics.rounds,
-            "state": state,
-        }
+        return state

@@ -139,3 +139,22 @@ def test_base_merge_keeps_history_and_reselects_best(tmp_path, monkeypatch):
     report = json.load(open(base))
     assert report["trials"] == 4
     assert report["efficiency"] == 0.91 and report["passes_0.8"] is True
+
+
+def test_base_merge_restores_only_the_best_pair_on_efficiency_tie(tmp_path, monkeypatch):
+    """Two pairs with equal efficiency: only the base's best pair (matched
+    on its unique ``t``) gets the base's exact measured throughputs back;
+    the other keeps its wall-derived reconstruction."""
+    mod = _load_module()
+    monkeypatch.setattr(mod, "REPO", str(tmp_path))
+    log = tmp_path / "tie.jsonl"
+    _write_log(log, [_pair(0.83, t=3.0), _pair(0.83, t=5.0, wall_small=500.0)])
+    monkeypatch.setattr(sys, "argv", ["compose_scaling", str(log)])
+    assert mod.main() == 0
+    base = tmp_path / "BENCH_SCALING.json"
+    assert json.load(open(base))["t"] == 3.0
+
+    by_t = {rec["t"]: rec for rec in mod.pairs_from_base(str(base))}
+    assert by_t[3.0]["small"]["urls_per_sec"] == 2000.0  # measured, restored
+    assert by_t[5.0]["small"]["wall_sec"] == 500.0
+    assert by_t[5.0]["small"]["urls_per_sec"] == 1600.0  # 800000 / 500.0

@@ -9,6 +9,7 @@ import shutil
 
 import pytest
 
+from hdx_metadata_crawler_spark.operators import ranking
 from hdx_metadata_crawler_spark.sources import synthetic
 from hdx_metadata_crawler_spark.streaming import bloom, simulator
 from hdx_metadata_crawler_spark.streaming.frontier import CrawlConfig, CrawlEngine
@@ -185,6 +186,18 @@ def test_empty_seed_list(spark, tmp_path):
     assert out["final_round"] is None
     assert out["state"]["documents"].count() == 0
     assert out["state"]["seen"].count() == 0
+
+
+def test_empty_frontier_exit_releases_persisted_frames(spark, tmp_path):
+    """A run that stops on an empty frontier must leave no probe or rank
+    frame registered: the next session's first release_persisted() would
+    unpersist a frame of a stopped SparkContext."""
+    engine = CrawlEngine(spark, str(tmp_path / "ckpt"), CFG)
+    out = engine.run(seed_urls=synthetic.seed_urls(20))
+    assert out["final_round"] < CFG.max_rounds - 1
+    assert out["state"]["frontier"].count() == 0
+    assert bloom._PERSISTED == []
+    assert ranking._PERSISTED == []
 
 
 def test_salted_partitioning_breaks_hot_host_skew(spark):

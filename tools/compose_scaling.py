@@ -50,8 +50,15 @@ def pairs_from_base(path: str) -> list[dict]:
         k: base["small"][k]
         for k in ("body_scale", "n_urls", "n_candidates", "n_docs")
     }
+    pairs = base.get("all_pairs", [])
+    # the best pair is the one whose unique hunter timestamp the base
+    # recorded; efficiencies can tie.  Bases composed before ``t`` was
+    # written fall back to the earliest best-efficiency pair.
+    best_t = base.get("t")
+    if best_t is None and pairs:
+        best_t = max(pairs, key=lambda p: p["efficiency"])["t"]
     out = []
-    for p in base.get("all_pairs", []):
+    for p in pairs:
         rec = {
             "kind": "pair",
             "small": {
@@ -77,7 +84,7 @@ def pairs_from_base(path: str) -> list[dict]:
         }
         # the base's best pair kept its exact measured throughputs —
         # restore them rather than the wall-derived reconstruction
-        if p["efficiency"] == base["efficiency"]:
+        if p["t"] == best_t:
             rec["small"], rec["large"] = base["small"], base["large"]
         out.append(rec)
     return out
@@ -119,6 +126,7 @@ def main() -> int:
         "large_walls": [p["large"]["wall_sec"] for p in pairs],
         "speedup": best["speedup"],
         "efficiency": best["efficiency"],
+        "t": best["t"],
         "passes_0.8": best["efficiency"] >= 0.8,
         "host_cpu_ceiling": best["ceiling_before"],
         "host_cpu_ceiling_after": best["ceiling_after"],
