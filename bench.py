@@ -161,6 +161,7 @@ def _get_spark(cores: int) -> SparkSession:
         "bench",
         master=f"local[{cores}]",
         shuffle_partitions=max(cores, 8),
+        long_lived=True,
     )
 
 

@@ -21,6 +21,24 @@ Settings chosen for the 100 TB design point but safe in local mode:
   on the ``PYTHONPATH`` the JVM inherits.  Cluster masters keep the stock daemon:
   there the package arrives per task (``--py-files``), after the daemon has
   started.
+- A batch job on a local master launches its JVM with
+  ``-XX:TieredStopAtLevel=1``: it compiles with C1 only.  In local mode that
+  one JVM runs the driver and every task, and each batch job starts a fresh
+  one.  Measured per thread on a 4-core host, one crawl spent ~50 s of CPU
+  in C2 compiler threads against ~15 s in task threads.  C2 was compiling
+  Spark's control plane, not the data path: JDK internals, the Janino code
+  generator, catalyst, task serialization, the Scala library; generated
+  classes took 0% of it.  C1-only halved the CPU of a crawl batch job and
+  of an analytics-board pass.  The trade: interpreted higher-order
+  functions over ``md5`` hashes (``minhash_lsh_dedup``'s
+  ``transform``/``array_min``) lose C2's inlining and run ~2 s slower.
+  A ``long_lived`` session (a test suite, ``tools/verify_local.py``,
+  ``bench.py``: many jobs over minutes) keeps stock HotSpot, because there
+  C2's compiled control plane pays back: C1-only made the 142-query
+  ``verify_local`` run 175 -> 253 s and the test suite 642 -> 1016 s.  A
+  caller's own ``spark.driver.extraJavaOptions`` goes after the flag, and
+  HotSpot keeps the last occurrence, so ``-XX:TieredStopAtLevel=4`` brings
+  C2 back.  Cluster masters keep stock HotSpot.
 """
 
 from __future__ import annotations
@@ -34,25 +52,32 @@ from pyspark.sql import SparkSession
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _DAEMON_MODULE = f"{__package__}._worker_daemon"
 _LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
+_DRIVER_JAVA_OPTIONS = "spark.driver.extraJavaOptions"
+_C1_ONLY = "-XX:TieredStopAtLevel=1"
 
 
-def _python_daemon_conf(master: str) -> dict[str, str]:
-    """``spark.python.daemon.module`` for a local master whose JVM can import
-    this package; empty otherwise (the stock daemon).
+def _local_master_conf(master: str, long_lived: bool) -> dict[str, str]:
+    """What a local master gets: the preloading ``spark.python.daemon.module``
+    and, unless the session is ``long_lived``, a C1-only JIT.  Empty for any
+    other master (stock daemon, stock HotSpot).
 
     A JVM not launched yet inherits ``os.environ``, so the package root is
-    exported first.  A JVM already running keeps the environment it was
-    launched with; the daemon is selected only if that has the root."""
+    exported first, and it takes the JIT flag.  A JVM already running keeps
+    the flags and environment it was launched with; the daemon is selected
+    only if that environment has the root."""
     if not _LOCAL_MASTER.fullmatch(master):
         return {}
     if SparkContext._gateway is None:
         paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
         if _PACKAGE_ROOT not in paths:
             os.environ["PYTHONPATH"] = os.pathsep.join([_PACKAGE_ROOT, *paths])
-    else:
-        jvm_paths = (SparkContext._jvm.System.getenv("PYTHONPATH") or "").split(os.pathsep)
-        if _PACKAGE_ROOT not in jvm_paths:
-            return {}
+        conf = {"spark.python.daemon.module": _DAEMON_MODULE}
+        if not long_lived:
+            conf[_DRIVER_JAVA_OPTIONS] = _C1_ONLY
+        return conf
+    jvm_paths = (SparkContext._jvm.System.getenv("PYTHONPATH") or "").split(os.pathsep)
+    if _PACKAGE_ROOT not in jvm_paths:
+        return {}
     return {"spark.python.daemon.module": _DAEMON_MODULE}
 
 
@@ -61,7 +86,10 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
+    long_lived: bool = False,
 ) -> SparkSession:
+    """A session for one batch job, or, with ``long_lived``, for a process
+    that runs many jobs over minutes (see the module docstring)."""
     master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[*]")
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
@@ -77,6 +105,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    for k, v in {**_python_daemon_conf(master), **(extra_conf or {})}.items():
+    conf = _local_master_conf(master, long_lived)
+    for k, v in (extra_conf or {}).items():
+        # HotSpot keeps a flag's last occurrence: the caller's options win
+        conf[k] = f"{conf[k]} {v}" if k == _DRIVER_JAVA_OPTIONS and k in conf else v
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

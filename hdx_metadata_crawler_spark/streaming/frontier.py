@@ -411,21 +411,8 @@ class CrawlEngine:
 
     def _rebuild_seen_store(self, seen: DataFrame) -> DataFrame:
         self.spark.sql(f"DROP TABLE IF EXISTS {self._seen_table}")
-        # A killed run's JVM takes the in-memory catalog with it but leaves
-        # the table's warehouse DIRECTORY behind; to the next session that
-        # orphan is invisible to DROP TABLE yet blocks saveAsTable with
-        # LOCATION_ALREADY_EXISTS.  The store is a derived accelerator
-        # (committed deltas stay the source of truth), so an unregistered
-        # location under the warehouse is always safe to clear.  Local
-        # filesystems only — with a remote warehouse a persistent metastore
-        # survives the driver, and the DROP above already removed the data.
-        from urllib.parse import urlparse
-
-        loc = urlparse(self.spark.conf.get("spark.sql.warehouse.dir"))
-        if loc.scheme in ("", "file"):
-            orphan = os.path.join(loc.path, self._seen_table.lower())
-            if os.path.isdir(orphan):
-                shutil.rmtree(orphan)
+        # a killed run's warehouse directory, invisible to the DROP, is
+        # cleared by write_bucketed (the table is absent from the catalog)
         bucketing.write_bucketed(
             seen, self._seen_table, "url_hash", n_buckets=self.cfg.seen_buckets
         )

@@ -270,8 +270,12 @@ def _neardup_gate_fn(
                 hits = state_ids[
                     _hamming_vec(state_fps, fp) <= NEARDUP_MAX_DISTANCE
                 ]
+                # an earlier batch may hold a LARGER doc_id: orient every
+                # pair (max, min) so the later doc_id is credited, as the
+                # oracle's arrival order by doc_id does
                 out.extend(
-                    {"doc_id": doc_id, "partner_id": int(p)} for p in hits
+                    {"doc_id": max(doc_id, int(p)), "partner_id": min(doc_id, int(p))}
+                    for p in hits
                 )
             if k:
                 hits = b_ids[:k][
@@ -300,11 +304,11 @@ def neardup_gate_stream(chunk_rows: DataFrame) -> DataFrame:
     seen so far; an arriving doc is verified with the exact popcount
     against its bucket's state (bucket occupancy bounds the compare cost,
     the streaming analogue of the batch tier's bucketed join) and emits
-    one (doc_id, partner_id) row per EARLIER near-duplicate — dedup
-    across the 4 buckets a pair may share is a distinct() downstream.
-    Arrival order is doc_id within a batch and batch order across
-    restarts; replayed doc_ids are idempotently skipped.  State size is
-    O(docs) total but sharded per bucket — the shuffle key is
+    one (doc_id, partner_id) row per near-duplicate, oriented (max, min)
+    so the larger doc_id is credited even when a later batch carries the
+    smaller one — dedup across the 4 buckets a pair may share is a
+    distinct() downstream.  Replayed doc_ids are idempotently skipped.
+    State size is O(docs) total but sharded per bucket — the shuffle key is
     (chunk_idx, chunk_val), never the corpus."""
     return chunk_rows.groupBy("chunk_idx", "chunk_val").applyInPandasWithState(
         _neardup_gate_fn,

@@ -15,7 +15,7 @@ SF_MEDIUM = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("pytest", master="local[8]", shuffle_partitions=8)
+    s = get_spark("pytest", master="local[8]", shuffle_partitions=8, long_lived=True)
     yield s
     # drop the catalog-bucketed seen stores created by throwaway test
     # checkpoint dirs (one table per ckpt path) so warehouse disk doesn't

@@ -612,7 +612,8 @@ def test_seen_store_orphan_warehouse_dir_is_cleared(spark, tmp_path):
     seen-store table directory in the warehouse.  To the next session that
     orphan is invisible to DROP TABLE IF EXISTS yet makes saveAsTable fail
     with LOCATION_ALREADY_EXISTS — a fresh (or resumed) run over the same
-    checkpoint path must clear the unregistered location and proceed."""
+    checkpoint path must clear the unregistered location (the store's
+    ``bucketing.write_bucketed`` does) and proceed."""
     import os as _os
     from urllib.parse import urlparse
 

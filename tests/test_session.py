@@ -1,8 +1,16 @@
-"""session.get_spark: the preloading Python worker daemon on local masters."""
+"""session.get_spark: the preloading Python worker daemon and the C1-only JIT
+on local masters."""
+
+import os
+import subprocess
+import sys
+import types
 
 import pytest
 
 from hdx_metadata_crawler_spark import session
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_local_workers_fork_from_preloading_daemon(spark):
@@ -45,14 +53,94 @@ def test_local_workers_fork_from_preloading_daemon(spark):
     assert min(r.frozen for r in rows) > 10_000
 
 
+def vm_option(spark, name):
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    return bean.getVMOption(name).getValue()
+
+
 @pytest.mark.parametrize(
     "master", ["yarn", "spark://host:7077", "k8s://https://host:443", "local-cluster[2,1,1024]"]
 )
 def test_non_local_master_keeps_stock_daemon(master):
-    assert "spark.python.daemon.module" not in session._python_daemon_conf(master)
+    conf = session._local_master_conf(master, long_lived=False)
+    assert "spark.python.daemon.module" not in conf
+    # stock HotSpot: C2 stays on
+    assert "spark.driver.extraJavaOptions" not in conf
 
 
 @pytest.mark.parametrize("master", ["local", "local[4]", "local[*]", "local[4,2]"])
 def test_local_master_selects_daemon(spark, master):
-    conf = session._python_daemon_conf(master)
+    # the JVM is running: its flags are fixed, so only the daemon is selected
+    conf = session._local_master_conf(master, long_lived=False)
     assert conf == {"spark.python.daemon.module": "hdx_metadata_crawler_spark._worker_daemon"}
+    # the fixture's session is long_lived: stock HotSpot, C2 on
+    assert vm_option(spark, "TieredStopAtLevel") == "4"
+
+
+def test_batch_jvm_is_c1_only():
+    """A batch job's JVM (the default) is launched C1-only.  One process
+    holds one JVM, so a fresh one is started in a child process."""
+    script = f"""
+import sys
+sys.path.insert(0, {os.path.join(REPO, "tests")!r})
+from test_session import vm_option
+from hdx_metadata_crawler_spark.session import get_spark
+spark = get_spark("c1-probe", master="local[1]", shuffle_partitions=1)
+print("TieredStopAtLevel", vm_option(spark, "TieredStopAtLevel"))
+spark.stop()
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=REPO,
+        env={**os.environ, "SPARK_GRAFT_DRIVER_MEM": "512m"},
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "TieredStopAtLevel 1" in out.stdout.splitlines()
+
+
+class _RecordingBuilder:
+    def __init__(self):
+        self.conf = {}
+
+    def master(self, master):
+        return self.config("spark.master", master)
+
+    def appName(self, name):
+        return self.config("spark.app.name", name)
+
+    def config(self, key, value):
+        self.conf[key] = value
+        return self
+
+    def getOrCreate(self):
+        return self.conf
+
+
+@pytest.mark.parametrize(
+    "long_lived, java_options",
+    [
+        (False, "-XX:TieredStopAtLevel=1 -XX:TieredStopAtLevel=4 -Dx=1"),
+        (True, "-XX:TieredStopAtLevel=4 -Dx=1"),
+    ],
+)
+def test_caller_java_options_follow_c1_default(monkeypatch, long_lived, java_options):
+    """A batch JVM not launched yet takes the C1-only flag, and a caller's
+    own extraJavaOptions go after it, so HotSpot (last occurrence wins)
+    keeps the caller's choice.  A long-lived session adds no flag."""
+    monkeypatch.setattr(session.SparkContext, "_gateway", None)
+    monkeypatch.setattr(session, "SparkSession", types.SimpleNamespace(builder=_RecordingBuilder()))
+    # restored at teardown: the conf exports the package root into it
+    monkeypatch.setenv("PYTHONPATH", "")
+    conf = session.get_spark(
+        master="local[2]",
+        extra_conf={"spark.driver.extraJavaOptions": "-XX:TieredStopAtLevel=4 -Dx=1"},
+        long_lived=long_lived,
+    )
+    assert conf["spark.driver.extraJavaOptions"] == java_options
+    assert conf["spark.python.daemon.module"] == "hdx_metadata_crawler_spark._worker_daemon"

@@ -276,6 +276,33 @@ def test_neardup_gate_state_survives_across_runs(spark):
         shutil.rmtree(out, ignore_errors=True)
 
 
+def test_neardup_gate_credits_larger_doc_id_across_batches(spark):
+    """A later batch may carry a SMALLER doc_id than a near-dup already in
+    state.  The pair is still (doc_id = max, partner_id = min): the oracle
+    orders arrival by doc_id, so the larger id is the one suppressed, and
+    per-doc counts do not depend on how the stream was split into batches."""
+    base = 0x0BCDEF0123456789
+    src = tempfile.mkdtemp(prefix="ndgate_src_")
+    ckpt = tempfile.mkdtemp(prefix="ndgate_ckpt_")
+    out = tempfile.mkdtemp(prefix="ndgate_out_")
+    try:
+        spark.createDataFrame(pd.DataFrame(_chunk_rows(5, base))).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+        assert _run_ndgate_once(spark, src, ckpt, out) == []
+
+        # doc 3 arrives after doc 5, hamming 1 from it
+        spark.createDataFrame(pd.DataFrame(_chunk_rows(3, base ^ 0b1))).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+        got = {(r["doc_id"], r["partner_id"]) for r in _run_ndgate_once(spark, src, ckpt, out)}
+        assert got == {(5, 3)}
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
+        shutil.rmtree(out, ignore_errors=True)
+
+
 def test_neardup_gate_matches_batch_pair_tier(spark):
     """On the real corpus the gate's suppression set must equal the batch
     simhash tier's: suppressed == {id_b of some hamming<=3 pair} (first

@@ -10,10 +10,11 @@ Usage: python tools/verify_local.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
@@ -53,7 +54,7 @@ def main() -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
 
-    spark = get_spark("verify-local", master="local[8]", shuffle_partitions=8)
+    spark = get_spark("verify-local", master="local[8]", shuffle_partitions=8, long_lived=True)
     con = duckdb.connect()
     for t in TABLE_NAMES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
