@@ -155,13 +155,14 @@ HEADLINE = [
 
 
 def _get_spark(cores: int) -> SparkSession:
-    from hdx_metadata_crawler_spark.session import get_spark
+    from hdx_metadata_crawler_spark.session import C2_JIT_CONF, get_spark
 
+    # one JVM runs every query: C1-only doubled the headline total
     return get_spark(
         "bench",
         master=f"local[{cores}]",
         shuffle_partitions=max(cores, 8),
-        long_lived=True,
+        extra_conf=C2_JIT_CONF,
     )
 
 

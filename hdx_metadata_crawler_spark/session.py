@@ -21,24 +21,23 @@ Settings chosen for the 100 TB design point but safe in local mode:
   on the ``PYTHONPATH`` the JVM inherits.  Cluster masters keep the stock daemon:
   there the package arrives per task (``--py-files``), after the daemon has
   started.
-- A batch job on a local master launches its JVM with
-  ``-XX:TieredStopAtLevel=1``: it compiles with C1 only.  In local mode that
-  one JVM runs the driver and every task, and each batch job starts a fresh
-  one.  Measured per thread on a 4-core host, one crawl spent ~50 s of CPU
-  in C2 compiler threads against ~15 s in task threads.  C2 was compiling
-  Spark's control plane, not the data path: JDK internals, the Janino code
-  generator, catalyst, task serialization, the Scala library; generated
-  classes took 0% of it.  C1-only halved the CPU of a crawl batch job and
-  of an analytics-board pass.  The trade: interpreted higher-order
+- A new JVM on a local master is launched with ``-XX:TieredStopAtLevel=1``
+  (``spark.driver.defaultJavaOptions``): it compiles with C1 only.  In local
+  mode that one JVM runs the driver and every task, and each batch job
+  starts a fresh one.  Measured per thread on a 4-core host, one crawl spent
+  ~50 s of CPU in C2 compiler threads against ~15 s in task threads.  C2 was
+  compiling Spark's control plane, not the data path: JDK internals, the
+  Janino code generator, catalyst, task serialization, the Scala library;
+  generated classes took 0% of it.  C1-only halved the CPU of a crawl batch
+  job and of an analytics-board pass.  The trade: interpreted higher-order
   functions over ``md5`` hashes (``minhash_lsh_dedup``'s
-  ``transform``/``array_min``) lose C2's inlining and run ~2 s slower.
-  A ``long_lived`` session (a test suite, ``tools/verify_local.py``,
-  ``bench.py``: many jobs over minutes) keeps stock HotSpot, because there
-  C2's compiled control plane pays back: C1-only made the 142-query
-  ``verify_local`` run 175 -> 253 s and the test suite 642 -> 1016 s.  A
-  caller's own ``spark.driver.extraJavaOptions`` goes after the flag, and
-  HotSpot keeps the last occurrence, so ``-XX:TieredStopAtLevel=4`` brings
-  C2 back.  Cluster masters keep stock HotSpot.
+  ``transform``/``array_min``) lose C2's inlining and run ~2 s slower, and a
+  process that runs many jobs over minutes can lose overall: C1-only made
+  the 142-query ``tools/verify_local.py`` run 175 -> 253 s and the test
+  suite 642 -> 1016 s.  Such callers pass ``extra_conf=C2_JIT_CONF``.
+  Spark's launcher puts ``spark.driver.extraJavaOptions`` after the default
+  options, and HotSpot keeps a flag's last occurrence, so the caller's
+  ``-XX:TieredStopAtLevel=4`` wins.  Cluster masters keep stock HotSpot.
 """
 
 from __future__ import annotations
@@ -52,14 +51,15 @@ from pyspark.sql import SparkSession
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _DAEMON_MODULE = f"{__package__}._worker_daemon"
 _LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
-_DRIVER_JAVA_OPTIONS = "spark.driver.extraJavaOptions"
-_C1_ONLY = "-XX:TieredStopAtLevel=1"
+
+# extra_conf that brings C2 back in a new local-master JVM
+C2_JIT_CONF = {"spark.driver.extraJavaOptions": "-XX:TieredStopAtLevel=4"}
 
 
-def _local_master_conf(master: str, long_lived: bool) -> dict[str, str]:
+def _local_master_conf(master: str) -> dict[str, str]:
     """What a local master gets: the preloading ``spark.python.daemon.module``
-    and, unless the session is ``long_lived``, a C1-only JIT.  Empty for any
-    other master (stock daemon, stock HotSpot).
+    and a C1-only JIT.  Empty for any other master (stock daemon, stock
+    HotSpot).
 
     A JVM not launched yet inherits ``os.environ``, so the package root is
     exported first, and it takes the JIT flag.  A JVM already running keeps
@@ -71,10 +71,10 @@ def _local_master_conf(master: str, long_lived: bool) -> dict[str, str]:
         paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
         if _PACKAGE_ROOT not in paths:
             os.environ["PYTHONPATH"] = os.pathsep.join([_PACKAGE_ROOT, *paths])
-        conf = {"spark.python.daemon.module": _DAEMON_MODULE}
-        if not long_lived:
-            conf[_DRIVER_JAVA_OPTIONS] = _C1_ONLY
-        return conf
+        return {
+            "spark.python.daemon.module": _DAEMON_MODULE,
+            "spark.driver.defaultJavaOptions": "-XX:TieredStopAtLevel=1",
+        }
     jvm_paths = (SparkContext._jvm.System.getenv("PYTHONPATH") or "").split(os.pathsep)
     if _PACKAGE_ROOT not in jvm_paths:
         return {}
@@ -86,10 +86,7 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    long_lived: bool = False,
 ) -> SparkSession:
-    """A session for one batch job, or, with ``long_lived``, for a process
-    that runs many jobs over minutes (see the module docstring)."""
     master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[*]")
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
@@ -105,10 +102,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    conf = _local_master_conf(master, long_lived)
-    for k, v in (extra_conf or {}).items():
-        # HotSpot keeps a flag's last occurrence: the caller's options win
-        conf[k] = f"{conf[k]} {v}" if k == _DRIVER_JAVA_OPTIONS and k in conf else v
-    for k, v in conf.items():
+    for k, v in {**_local_master_conf(master), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

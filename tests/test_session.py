@@ -65,18 +65,20 @@ def vm_option(spark, name):
     "master", ["yarn", "spark://host:7077", "k8s://https://host:443", "local-cluster[2,1,1024]"]
 )
 def test_non_local_master_keeps_stock_daemon(master):
-    conf = session._local_master_conf(master, long_lived=False)
+    conf = session._local_master_conf(master)
     assert "spark.python.daemon.module" not in conf
     # stock HotSpot: C2 stays on
+    assert "spark.driver.defaultJavaOptions" not in conf
     assert "spark.driver.extraJavaOptions" not in conf
 
 
 @pytest.mark.parametrize("master", ["local", "local[4]", "local[*]", "local[4,2]"])
 def test_local_master_selects_daemon(spark, master):
     # the JVM is running: its flags are fixed, so only the daemon is selected
-    conf = session._local_master_conf(master, long_lived=False)
+    conf = session._local_master_conf(master)
     assert conf == {"spark.python.daemon.module": "hdx_metadata_crawler_spark._worker_daemon"}
-    # the fixture's session is long_lived: stock HotSpot, C2 on
+    # the fixture passes C2_JIT_CONF, whose extraJavaOptions the launcher
+    # puts after the C1-only default: C2 is on
     assert vm_option(spark, "TieredStopAtLevel") == "4"
 
 
@@ -122,17 +124,11 @@ class _RecordingBuilder:
         return self.conf
 
 
-@pytest.mark.parametrize(
-    "long_lived, java_options",
-    [
-        (False, "-XX:TieredStopAtLevel=1 -XX:TieredStopAtLevel=4 -Dx=1"),
-        (True, "-XX:TieredStopAtLevel=4 -Dx=1"),
-    ],
-)
-def test_caller_java_options_follow_c1_default(monkeypatch, long_lived, java_options):
-    """A batch JVM not launched yet takes the C1-only flag, and a caller's
-    own extraJavaOptions go after it, so HotSpot (last occurrence wins)
-    keeps the caller's choice.  A long-lived session adds no flag."""
+def test_caller_java_options_survive_c1_default(monkeypatch):
+    """A JVM not launched yet takes the C1-only flag as a default option,
+    and a caller's own extraJavaOptions are kept beside it; the launcher
+    puts them after the default, so HotSpot (last occurrence wins) keeps
+    the caller's choice."""
     monkeypatch.setattr(session.SparkContext, "_gateway", None)
     monkeypatch.setattr(session, "SparkSession", types.SimpleNamespace(builder=_RecordingBuilder()))
     # restored at teardown: the conf exports the package root into it
@@ -140,7 +136,7 @@ def test_caller_java_options_follow_c1_default(monkeypatch, long_lived, java_opt
     conf = session.get_spark(
         master="local[2]",
         extra_conf={"spark.driver.extraJavaOptions": "-XX:TieredStopAtLevel=4 -Dx=1"},
-        long_lived=long_lived,
     )
-    assert conf["spark.driver.extraJavaOptions"] == java_options
+    assert conf["spark.driver.defaultJavaOptions"] == "-XX:TieredStopAtLevel=1"
+    assert conf["spark.driver.extraJavaOptions"] == "-XX:TieredStopAtLevel=4 -Dx=1"
     assert conf["spark.python.daemon.module"] == "hdx_metadata_crawler_spark._worker_daemon"

@@ -18,7 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
-from hdx_metadata_crawler_spark.session import get_spark
+from hdx_metadata_crawler_spark.session import C2_JIT_CONF, get_spark
 from hdx_metadata_crawler_spark.sources.tables import TABLE_NAMES
 
 
@@ -54,7 +54,9 @@ def main() -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
 
-    spark = get_spark("verify-local", master="local[8]", shuffle_partitions=8, long_lived=True)
+    spark = get_spark(
+        "verify-local", master="local[8]", shuffle_partitions=8, extra_conf=C2_JIT_CONF
+    )
     con = duckdb.connect()
     for t in TABLE_NAMES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
