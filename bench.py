@@ -173,38 +173,30 @@ def _materialize(df) -> int:
     return -1
 
 
-def crawl_round_throughput(spark: SparkSession, n_urls: int, cores: int) -> dict:
-    """One frontier round's dataflow over n_urls synthetic seed URLs — the
-    north-rule metric.  Mirrors streaming/frontier.py's per-round plan with
-    a 30%-pre-seen seen-set so the bloom probe + exact rescue both do work.
-    The fetch stage is the deterministic resolver (sha256-based record
-    synthesis — CPU-bound, like real parse+extract work per document)."""
-    import shutil
-    import tempfile
+# Fixed task counts at every parallelism level: the scaling experiment is
+# "same job, two cluster sizes" (north rule) — only executor threads vary.
+ROUND_TASKS = 128
 
+
+def crawl_round_inputs(spark: SparkSession, n_urls: int):
+    """(frontier, seen, blooms) for one synthetic crawl round, cached and
+    materialized: n_urls seed URLs, a seen set holding 30% of them (so the
+    bloom probe and the exact rescue both do work) and its blooms at
+    P=ROUND_TASKS.  ``tools/phase_timing.py`` times its phases on the same
+    inputs."""
     import pandas as pd
+    from pyspark.sql.functions import pandas_udf
 
     from hdx_metadata_crawler_spark.functions.url import url_hash
     from hdx_metadata_crawler_spark.sources import synthetic
     from hdx_metadata_crawler_spark.streaming import bloom
-    from hdx_metadata_crawler_spark.streaming.frontier import (
-        _FETCH_SCHEMA,
-        _fetch_batches,
-        build_spans,
-        politeness_slots,
-    )
-    from pyspark.sql.functions import pandas_udf
-
-    # Fixed task counts at every parallelism level: the scaling experiment is
-    # "same job, two cluster sizes" (north rule) — only executor threads vary.
-    n_tasks = 128
 
     @pandas_udf("string")
     def seed_url_udf(seq: pd.Series) -> pd.Series:
         return seq.map(synthetic.seed_url)
 
     frontier = (
-        spark.range(n_urls, numPartitions=n_tasks)
+        spark.range(n_urls, numPartitions=ROUND_TASKS)
         .select(seed_url_udf(F.col("id")).alias("canon_url"))
         .select(
             "canon_url",
@@ -230,8 +222,29 @@ def crawl_round_throughput(spark: SparkSession, n_urls: int, cores: int) -> dict
     # them incrementally — an O(|seen|) rebuild inside the measurement would
     # misattribute checkpoint-amortized work to the round (and grow with
     # n_urls).  Same rule as the frontier/seen materialization above.
-    blooms = bloom.build_blooms(seen, n_partitions=128).cache()
+    blooms = bloom.build_blooms(seen, n_partitions=ROUND_TASKS).cache()
     blooms.count()  # materialized: the timed probe reads the cached state
+    return frontier, seen, blooms
+
+
+def crawl_round_throughput(spark: SparkSession, n_urls: int, cores: int) -> dict:
+    """One frontier round's dataflow over n_urls synthetic seed URLs — the
+    north-rule metric.  Mirrors streaming/frontier.py's per-round plan on
+    the inputs of ``crawl_round_inputs``.  The fetch stage is the
+    deterministic resolver (sha256-based record synthesis — CPU-bound, like
+    real parse+extract work per document)."""
+    import shutil
+    import tempfile
+
+    from hdx_metadata_crawler_spark.streaming import bloom
+    from hdx_metadata_crawler_spark.streaming.frontier import (
+        _FETCH_SCHEMA,
+        _fetch_batches,
+        build_spans,
+        politeness_slots,
+    )
+
+    frontier, seen, blooms = crawl_round_inputs(spark, n_urls)
     # True candidate count (reported, not timed): frontier minus seen.
     n_candidates = frontier.join(
         seen.select("url_hash"), "url_hash", "left_anti"
@@ -240,8 +253,7 @@ def crawl_round_throughput(spark: SparkSession, n_urls: int, cores: int) -> dict
     out_dir = tempfile.mkdtemp(prefix="bench_crawl_docs_")
     t0 = time.time()
     candidates = bloom.bloom_anti_join(
-        frontier, seen, blooms, n_partitions=128,
-        mode=os.environ.get("SPARK_GRAFT_PROBE_MODE", "copartition"),
+        frontier, seen, blooms, n_partitions=ROUND_TASKS
     )
 
     scheduled = politeness_slots(candidates, rps=2.0, n_salts=64)
@@ -251,7 +263,7 @@ def crawl_round_throughput(spark: SparkSession, n_urls: int, cores: int) -> dict
     # 3.30 on the 70%-hot-host universe — a straggler tail that binds the
     # 4N-core run while N-core runs amortize it over more task waves.
     fetched = (
-        scheduled.repartition(n_tasks)
+        scheduled.repartition(ROUND_TASKS)
         .mapInPandas(_fetch_batches, _FETCH_SCHEMA)
         .withColumn("round", F.lit(0))
     )

@@ -1,10 +1,14 @@
-"""Partitioned Bloom-filter URL-seen set (north rule).
+"""Partitioned URL-seen filter (north rule): one probe, two kernels.
 
 Design for the 10^10-URL frontier (SURVEY §4 physical strategy 1):
 
 - The seen set is hash-partitioned: partition p owns url_hashes with
-  ``pmod(url_hash, P) == p``.  Each partition materializes an m-bit Bloom
-  bitset (k hash probes via Kirsch-Mitzenmacher double hashing h1 + i*h2).
+  ``pmod(url_hash, P) == p`` (``partition_key``).  Each partition
+  materializes one filter row, stamped with the build-time P.  The bloom
+  kernel (this module) keeps an m-bit Bloom bitset (k hash probes via
+  Kirsch-Mitzenmacher double hashing h1 + i*h2).  The cuckoo kernel
+  (``cuckoo.py``) keeps a partial-key cuckoo table, the deletion-capable
+  fallback the north rule names (content expiry, seed retraction).
   Design-point arithmetic (10^10 keys): at TARGET_BITS_PER_KEY=20 the
   aggregate bitset state is 10^10 × 20 bits = **25 GB across the cluster**
   (12.5 GB at the MIN_BITS_PER_KEY=10 resize floor) — at P=4096 partitions
@@ -12,31 +16,25 @@ Design for the 10^10-URL frontier (SURVEY §4 physical strategy 1):
   whole-map-broadcastable, which is why the probe is co-partitioned
   (below); 6.1 MB per task trivially is.  ``test_crawl_engine.py::
   test_bloom_design_point_sizing`` pins these numbers.
-- Probe path (co-partitioned, executor-side — no driver collect, no
-  whole-state broadcast): candidates gain ``partition_id = pmod(hash, P)``
-  and are cogrouped with the blooms table on it, so each task holds exactly
-  ONE partition's bitset and probes its slice of candidates in a vectorized
-  Arrow batch (numpy bit math, no per-row Python).  The driver never holds
-  any bitset.  Bloom-NEGATIVE candidates are *definitely unseen* — they
-  skip the exact join entirely.  Bloom-POSITIVE candidates (true hits +
-  ~1% false positives) are rescued with an exact anti-join on url_hash so
-  a false positive can NEVER silently drop a URL (SURVEY §7.4 risk 2).
-- Probe parallelism equals P (one task per bloom partition), so size P to a
-  small multiple of total cluster cores (4096 at the design point).
+- Probe path (``seen_filter_anti_join``, co-partitioned, executor-side — no
+  driver collect, no whole-state broadcast): candidates gain the partition
+  key and are cogrouped with the filter table on it, so each task holds
+  exactly ONE partition's filter row, checks its ``n_partitions`` stamp and
+  asks the kernel for a vectorized membership mask (numpy, no per-row
+  Python).  Filter-NEGATIVE candidates are *definitely unseen* — they skip
+  the exact join entirely.  Filter-POSITIVE candidates (true hits + ~1%
+  false positives) are rescued with an exact anti-join on url_hash so a
+  false positive can NEVER silently drop a URL (SURVEY §7.4 risk 2).
+- Probe parallelism equals P (one task per filter partition), so size P to
+  a small multiple of total cluster cores (4096 at the design point).
 - In local tests P is small; the partitioning/probe mechanics are identical.
-
-Deletion support (the cuckoo-filter fallback named by the north rule) lives
-in ``cuckoo.py``: same partitioning and probe/rescue contract, 16-bit
-partial-key cuckoo tables with true ``remove`` — swap ``build_blooms`` /
-``bloom_anti_join`` for ``build_cuckoos`` / ``cuckoo_anti_join`` when the
-crawl needs to retract seen-set entries (content expiry, seed retraction).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -69,16 +67,22 @@ _BLOOM_SCHEMA = StructType(
 BLOOM_DDL = "partition_id int, n_partitions int, m long, n_keys long, bitset binary"
 
 
-def _check_partitioning(rows, n_partitions: int, where: str) -> None:
-    """The partition count is a cross-call invariant: probing or merging
-    with a different P than the table was built with would hash keys to
-    partition ids absent from the table, and absent partitions probe as
-    definitely-unseen — SILENT false negatives.  Every row carries the
-    build-time P so the mismatch is an error instead."""
+def partition_key(hash_col: str, n_partitions: int) -> Column:
+    """The seen-set partition that owns a key: ``pmod(hash, P)`` as int."""
+    return F.pmod(F.col(hash_col), F.lit(n_partitions)).cast("int")
+
+
+def check_partitioning(rows, n_partitions: int, where: str) -> None:
+    """The partition count is a cross-call invariant: probing, merging or
+    removing with a different P than the filter was built with would hash
+    keys to partition ids absent from the table (absent partitions probe as
+    definitely-unseen — SILENT false negatives) or route removals to the
+    wrong table.  Every filter row carries the build-time P so the mismatch
+    is an error instead."""
     for r in rows:
         if r["n_partitions"] != n_partitions:
             raise ValueError(
-                f"{where}: blooms were built with n_partitions="
+                f"{where}: the seen filter was built with n_partitions="
                 f"{r['n_partitions']} but called with {n_partitions} — "
                 "seen-set keys would silently bypass the filter"
             )
@@ -128,7 +132,7 @@ def build_blooms(
         )
 
     return (
-        seen.withColumn("partition_id", F.pmod(F.col(hash_col), F.lit(n_partitions)).cast("int"))
+        seen.withColumn("partition_id", partition_key(hash_col, n_partitions))
         .groupBy("partition_id")
         .applyInPandas(build_one, _BLOOM_SCHEMA)
     )
@@ -161,11 +165,9 @@ def merge_blooms(
     <= n_partitions tiny rows — the blooms table is n_partitions rows by
     construction, so this is O(P), not O(data).
     """
-    add = additions.withColumn(
-        "partition_id", F.pmod(F.col(hash_col), F.lit(n_partitions)).cast("int")
-    )
+    add = additions.withColumn("partition_id", partition_key(hash_col, n_partitions))
     old_rows = old.select("partition_id", "n_partitions", "m", "n_keys").collect()
-    _check_partitioning(old_rows, n_partitions, "merge_blooms")
+    check_partitioning(old_rows, n_partitions, "merge_blooms")
     old_meta = {r["partition_id"]: (r["m"], r["n_keys"]) for r in old_rows}
     add_counts = {
         r["partition_id"]: r["cnt"]
@@ -218,11 +220,7 @@ def merge_blooms(
     )
     if rebuild:
         rebuilt = build_blooms(
-            seen.withColumn(
-                "partition_id", F.pmod(F.col(hash_col), F.lit(n_partitions)).cast("int")
-            )
-            .filter(F.col("partition_id").isin(rebuild))
-            .drop("partition_id"),
+            seen.filter(partition_key(hash_col, n_partitions).isin(rebuild)),
             hash_col=hash_col,
             n_partitions=n_partitions,
         )
@@ -230,116 +228,60 @@ def merge_blooms(
     return merged
 
 
-def _copartition_flag(
-    candidates: DataFrame, blooms: DataFrame, hash_col: str, n_partitions: int
-) -> DataFrame:
-    """candidates + _maybe_seen via the cogrouped per-partition probe (each
-    task holds exactly one bitset; the driver holds none)."""
-    cand = candidates.withColumn(
-        "_bloom_part", F.pmod(F.col(hash_col), F.lit(n_partitions)).cast("int")
-    )
-    out_schema = StructType(cand.schema.fields + [StructField("_maybe_seen", BooleanType())])
-
-    def probe(key: tuple, cpdf: pd.DataFrame, bpdf: pd.DataFrame) -> pd.DataFrame:
-        if cpdf.empty:
-            return cpdf.assign(_maybe_seen=pd.Series(dtype=bool))
-        if bpdf.empty:
-            return cpdf.assign(_maybe_seen=False)
-        row = bpdf.iloc[0]
-        if int(row["n_partitions"]) != n_partitions:
-            raise ValueError(
-                f"bloom_anti_join: blooms were built with n_partitions="
-                f"{int(row['n_partitions'])} but probed with {n_partitions} — "
-                "seen-set keys would silently bypass the filter"
-            )
-        m = int(row["m"])
-        bits = np.unpackbits(np.frombuffer(row["bitset"], dtype=np.uint8))
-        hashes = cpdf[hash_col].to_numpy(dtype=np.int64).view(np.uint64)
-        pos = _probe_positions(hashes, m)
-        return cpdf.assign(_maybe_seen=bits[pos].all(axis=1))
-
-    return (
-        cand.groupBy("_bloom_part")
-        .cogroup(blooms.withColumnRenamed("partition_id", "_bloom_part").groupBy("_bloom_part"))
-        .applyInPandas(probe, out_schema)
-        .drop("_bloom_part")
-    )
+def bloom_contains(row: pd.Series, hashes: np.ndarray) -> np.ndarray:
+    """Bloom kernel: membership mask of uint64 ``hashes`` in one bloom row."""
+    bits = np.unpackbits(np.frombuffer(row["bitset"], dtype=np.uint8))
+    return bits[_probe_positions(hashes, int(row["m"]))].all(axis=1)
 
 
-def _broadcast_flag(
-    candidates: DataFrame, blooms: DataFrame, hash_col: str, n_partitions: int
-) -> DataFrame:
-    """candidates + _maybe_seen via a broadcast column UDF — shuffle-free,
-    but the whole filter state passes through the driver: caller-opt-in
-    small-state path ONLY."""
-    spark = candidates.sparkSession
-    bloom_rows = blooms.collect()
-    _check_partitioning(bloom_rows, n_partitions, "bloom_anti_join[broadcast]")
-    bloom_map = {
-        r["partition_id"]: (r["m"], np.unpackbits(np.frombuffer(r["bitset"], dtype=np.uint8)))
-        for r in bloom_rows
-    }
-    bc = spark.sparkContext.broadcast(bloom_map)
-    n_part_bc = spark.sparkContext.broadcast(n_partitions)
-
-    @F.pandas_udf(BooleanType())
-    def maybe_seen(h: pd.Series) -> pd.Series:
-        bm = bc.value
-        if not bm:
-            return pd.Series(np.zeros(len(h), dtype=bool))
-        hashes = h.to_numpy(dtype=np.int64).view(np.uint64)
-        parts = (h.to_numpy(dtype=np.int64) % n_part_bc.value + n_part_bc.value) % n_part_bc.value
-        out = np.zeros(len(h), dtype=bool)
-        for p in np.unique(parts):
-            if p not in bm:
-                continue
-            m, bits = bm[p]
-            mask = parts == p
-            pos = _probe_positions(hashes[mask], m)
-            out[mask] = bits[pos].all(axis=1)
-        return pd.Series(out)
-
-    return candidates.withColumn("_maybe_seen", maybe_seen(F.col(hash_col)))
-
-
-def bloom_anti_join(
+def seen_filter_anti_join(
     candidates: DataFrame,
     seen: DataFrame,
-    blooms: DataFrame,
+    filters: DataFrame,
+    contains,
     hash_col: str = "url_hash",
     n_partitions: int = 16,
-    mode: str = "copartition",
 ) -> DataFrame:
-    """candidates ∖ seen, bloom-accelerated and false-drop-free.
+    """candidates ∖ seen, filter-accelerated and false-drop-free.
 
-    Plan (mode="copartition", the default and the ONLY design that holds at
-    the 10^10-key design point): candidates are repartitioned by
-    ``pmod(url_hash, P)`` and cogrouped with the blooms table on
-    partition_id, so each task receives its slice of candidates plus the
-    SINGLE bloom row it needs (~6 MB at the design point, see module
-    docstring) and probes it vectorized.  No task ever holds more than its
-    own partition's bitset, and the driver holds none — a collect-all +
-    whole-map broadcast is a 25 GB driver/broadcast memory wall at the
-    design point.  Only the maybe-seen slice (≈ |true hits| + ~1% of the
-    rest) takes the exact anti-join; the definitely-unseen slice passes
-    through.  Probe parallelism equals P, so size P to a small multiple of
-    cluster cores.
+    ``filters`` holds one row per partition (``partition_id``,
+    ``n_partitions`` and the kernel's state); ``contains(row, hashes)`` is
+    the kernel that returns the membership mask for uint64 ``hashes``
+    against one such row (``bloom_contains``, ``cuckoo.cuckoo_contains``).
 
-    mode="broadcast" keeps the small-state fast path: collect the bitsets
-    once, broadcast, and probe as a shuffle-free column UDF at the
-    candidates' full partitioning.  Valid ONLY while the aggregate bitset
-    bytes are broadcast-sized (local tests, early crawl rounds); it is the
-    caller's opt-in, never the default.
+    Plan: candidates are repartitioned by ``partition_key`` and cogrouped
+    with the filter table on partition_id, so each task receives its slice
+    of candidates plus the SINGLE filter row it needs (~6 MB at the design
+    point, see module docstring) and probes it vectorized.  No task ever
+    holds more than its own partition's filter, and the driver holds none —
+    a collect-all + whole-map broadcast is a 25 GB driver/broadcast memory
+    wall at the design point.  Only the maybe-seen slice (≈ |true hits| +
+    the false positives) takes the exact anti-join; the definitely-unseen
+    slice passes through.
 
     The build-time/probe-time ``n_partitions`` invariant is validated
-    inside the probe task in copartition mode (a mismatch would silently
-    hash keys to absent partitions → false negatives), so the error
-    surfaces at action time; broadcast mode validates eagerly.
+    inside the probe task (a mismatch would silently hash keys to absent
+    partitions → false negatives), so the error surfaces at action time.
     """
-    if mode == "broadcast":
-        flagged = _broadcast_flag(candidates, blooms, hash_col, n_partitions)
-    else:
-        flagged = _copartition_flag(candidates, blooms, hash_col, n_partitions)
+    cand = candidates.withColumn("_filter_part", partition_key(hash_col, n_partitions))
+    out_schema = StructType(cand.schema.fields + [StructField("_maybe_seen", BooleanType())])
+
+    def probe(key: tuple, cpdf: pd.DataFrame, fpdf: pd.DataFrame) -> pd.DataFrame:
+        if cpdf.empty:
+            return cpdf.assign(_maybe_seen=pd.Series(dtype=bool))
+        if fpdf.empty:
+            return cpdf.assign(_maybe_seen=False)
+        row = fpdf.iloc[0]
+        check_partitioning([row], n_partitions, "seen-filter probe")
+        hashes = cpdf[hash_col].to_numpy(dtype=np.int64).view(np.uint64)
+        return cpdf.assign(_maybe_seen=contains(row, hashes))
+
+    flagged = (
+        cand.groupBy("_filter_part")
+        .cogroup(filters.withColumnRenamed("partition_id", "_filter_part").groupBy("_filter_part"))
+        .applyInPandas(probe, out_schema)
+        .drop("_filter_part")
+    )
     # Persist the flagged frontier: both branches (pass-through and rescue)
     # consume it, and without a persist the probe + candidate lineage would
     # be recomputed once per branch (measured ~2x the probe cost per round).
@@ -352,7 +294,7 @@ def bloom_anti_join(
     # no .distinct() on the seen side: a left_anti join is insensitive to
     # right-side duplicates, and the distinct was a full hash-aggregate
     # shuffle over the ENTIRE seen set EVERY round — O(|seen|), the exact
-    # cost the bloom exists to avoid at the 10^10-key design point.
+    # cost the filter exists to avoid at the 10^10-key design point.
     rescue = (
         flagged.filter(F.col("_maybe_seen"))
         .drop("_maybe_seen")
@@ -361,10 +303,23 @@ def bloom_anti_join(
     return definitely_new.unionByName(rescue)
 
 
+def bloom_anti_join(
+    candidates: DataFrame,
+    seen: DataFrame,
+    blooms: DataFrame,
+    hash_col: str = "url_hash",
+    n_partitions: int = 16,
+) -> DataFrame:
+    """candidates ∖ seen through the bloom kernel (``seen_filter_anti_join``)."""
+    return seen_filter_anti_join(
+        candidates, seen, blooms, bloom_contains, hash_col, n_partitions
+    )
+
+
 _PERSISTED: list[DataFrame] = []
 
 
 def release_persisted() -> None:
-    """Unpersist intermediates pinned by bloom_anti_join (call per round)."""
+    """Unpersist intermediates pinned by seen_filter_anti_join (call per round)."""
     while _PERSISTED:
         _PERSISTED.pop().unpersist()

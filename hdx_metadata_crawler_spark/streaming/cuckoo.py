@@ -1,16 +1,18 @@
-"""Partitioned cuckoo-filter URL-seen set — the deletion-capable fallback
-named by the north rule (bloom filters cannot delete; a crawl that re-queues
-URLs after content expiry, or retracts poisoned seeds, needs removal).
+"""Cuckoo kernel of the partitioned URL-seen filter — the deletion-capable
+fallback named by the north rule (bloom filters cannot delete; a crawl that
+re-queues URLs after content expiry, or retracts poisoned seeds, needs
+removal).
 
 Standard cuckoo filter (Fan et al., CoNEXT'14 'Cuckoo Filter: Practically
 Better Than Bloom'): buckets of ``SLOTS`` 16-bit fingerprints; key x lives in
 bucket ``i1 = h(x) % m`` or ``i2 = i1 XOR h(fp(x)) % m`` (partial-key cuckoo
 hashing, so i1 is recoverable from (i2, fp) — required for eviction chains
-and deletes).  Same partitioning scheme as bloom.py: partition p owns
-url_hashes with pmod(url_hash, P) == p; each partition's filter is built in
-one ``applyInPandas`` pass and the probe is a broadcast + vectorized batch
-check with the same exact-rescue anti-join (a filter positive can NEVER
-silently drop a URL; a filter negative is definitely-unseen).
+and deletes).  Partitioning, the ``n_partitions`` check, the co-partitioned
+probe and the exact-rescue anti-join are ``bloom.py``'s: each partition's
+table is built in one ``applyInPandas`` pass, and ``cuckoo_anti_join`` runs
+``bloom.seen_filter_anti_join`` with ``cuckoo_contains`` as its kernel (a
+filter positive can NEVER silently drop a URL; a filter negative is
+definitely-unseen).
 
 Deletes: ``remove`` drops one copy of the fingerprint from either candidate
 bucket — after a delete, membership for that key reports false (no
@@ -22,15 +24,15 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
-    BooleanType,
     IntegerType,
     LongType,
     StructField,
     StructType,
 )
+
+from . import bloom
 
 SLOTS = 4  # fingerprints per bucket
 MAX_KICKS = 500
@@ -138,32 +140,23 @@ CUCKOO_SCHEMA = StructType(
 )
 
 
-def _check_partitioning(rows, n_partitions: int, where: str) -> None:
-    """Same cross-call invariant as bloom._check_partitioning: probing,
-    merging, or removing with a different P than the tables were built with
-    silently bypasses the filter for absent partitions (false negatives) or
-    routes removals to the wrong table."""
-    for r in rows:
-        if r["n_partitions"] != n_partitions:
-            raise ValueError(
-                f"{where}: cuckoo tables were built with n_partitions="
-                f"{r['n_partitions']} but called with {n_partitions}"
-            )
+def _sized_m(n_keys: int) -> int:
+    """Bucket count for n_keys at <= 84% load at SLOTS=4 (the regime where
+    cuckoo insert still succeeds w.h.p.), rounded up to a power of two
+    (required by partial-key hashing), >= 64."""
+    return 1 << max(6, int(np.ceil(np.log2(max(n_keys, 1) / (SLOTS * 0.84)))))
 
 
 def build_cuckoos(
     seen: DataFrame,
     hash_col: str = "url_hash",
     n_partitions: int = 16,
-    keys_budget: int = 4096,
 ) -> DataFrame:
-    """seen(url_hash) -> cuckoos(partition_id, m, table).  m sized for
-    ~84% max load at SLOTS=4 (the regime where cuckoo insert still succeeds
-    w.h.p.), rounded up to a power of two (required by partial-key hashing);
-    production sizes from approx_count_distinct per partition."""
-    m = 1 << max(6, int(np.ceil(np.log2(keys_budget / (SLOTS * 0.84)))))
+    """seen(url_hash) -> cuckoos(partition_id, n_partitions, m, table), each
+    partition's m sized from its own key count (``_sized_m``)."""
 
     def build_one(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        m = _sized_m(len(pdf))
         t = CuckooTable(m)
         hashes = pdf[hash_col].to_numpy(dtype=np.int64).view(np.uint64)
         for i, h in enumerate(hashes):
@@ -177,9 +170,7 @@ def build_cuckoos(
         )
 
     return (
-        seen.withColumn(
-            "partition_id", F.pmod(F.col(hash_col), F.lit(n_partitions)).cast("int")
-        )
+        seen.withColumn("partition_id", bloom.partition_key(hash_col, n_partitions))
         .groupBy("partition_id")
         .applyInPandas(build_one, CUCKOO_SCHEMA)
     )
@@ -205,9 +196,9 @@ def cuckoo_remove(
     no matching fingerprint raises instead of being silently ignored; verify
     membership against the exact seen table first if the removal set may
     contain non-members."""
-    keyed = removals.withColumn(
-        "partition_id", F.pmod(F.col(hash_col), F.lit(n_partitions)).cast("int")
-    ).select("partition_id", hash_col)
+    keyed = removals.select(
+        bloom.partition_key(hash_col, n_partitions).alias("partition_id"), hash_col
+    )
 
     def update_one(key, tables: pd.DataFrame, rems: pd.DataFrame) -> pd.DataFrame:
         if tables.empty:
@@ -218,8 +209,7 @@ def cuckoo_remove(
                 )
             return tables
         row = tables.iloc[0]
-        t = CuckooTable(int(row["m"]), np.frombuffer(row["table"], dtype=np.uint16)
-                        .reshape(int(row["m"]), SLOTS).copy())
+        t = CuckooTable.from_bytes(int(row["m"]), row["table"])
         failed = 0
         for h in rems[hash_col].to_numpy(dtype=np.int64).view(np.uint64):
             if not t.remove(h):
@@ -235,13 +225,18 @@ def cuckoo_remove(
              "m": [t.m], "table": [t.to_bytes()]}
         )
 
-    _check_partitioning(
-        cuckoos.select("partition_id", "n_partitions").collect(),
+    bloom.check_partitioning(
+        cuckoos.select("n_partitions").collect(),
         n_partitions, "cuckoo_remove",
     )
     return cuckoos.groupBy("partition_id").cogroup(
         keyed.groupBy("partition_id")
     ).applyInPandas(update_one, CUCKOO_SCHEMA)
+
+
+def cuckoo_contains(row: pd.Series, hashes: np.ndarray) -> np.ndarray:
+    """Cuckoo kernel: membership mask of uint64 ``hashes`` in one table row."""
+    return CuckooTable.from_bytes(int(row["m"]), row["table"]).contains(hashes)
 
 
 def cuckoo_anti_join(
@@ -251,68 +246,7 @@ def cuckoo_anti_join(
     hash_col: str = "url_hash",
     n_partitions: int = 16,
 ) -> DataFrame:
-    """candidates ∖ seen with the cuckoo probe + exact rescue — identical
-    contract to bloom.bloom_anti_join (false-drop-free).
-
-    Co-partitioned executor-side probe, same shape as bloom_anti_join:
-    candidates cogroup with the cuckoo table on ``pmod(hash, P)`` so each
-    task holds exactly one partition's table and the driver holds none
-    (the previous collect-all + whole-map broadcast hit the same 10^10-key
-    driver memory wall as the bloom probe).  The n_partitions invariant is
-    validated inside the probe task and surfaces at action time.
-    """
-    cand = candidates.withColumn(
-        "_cuckoo_part", F.pmod(F.col(hash_col), F.lit(n_partitions)).cast("int")
+    """candidates ∖ seen through the cuckoo kernel (``bloom.seen_filter_anti_join``)."""
+    return bloom.seen_filter_anti_join(
+        candidates, seen, cuckoos, cuckoo_contains, hash_col, n_partitions
     )
-    out_schema = StructType(
-        cand.schema.fields + [StructField("_maybe_seen", BooleanType())]
-    )
-
-    def probe(key: tuple, cpdf: pd.DataFrame, tpdf: pd.DataFrame) -> pd.DataFrame:
-        if cpdf.empty:
-            return cpdf.assign(_maybe_seen=pd.Series(dtype=bool))
-        if tpdf.empty:
-            return cpdf.assign(_maybe_seen=False)
-        row = tpdf.iloc[0]
-        if int(row["n_partitions"]) != n_partitions:
-            raise ValueError(
-                f"cuckoo_anti_join: tables were built with n_partitions="
-                f"{int(row['n_partitions'])} but probed with {n_partitions} — "
-                "seen-set keys would silently bypass the filter"
-            )
-        hashes = cpdf[hash_col].to_numpy(dtype=np.int64).view(np.uint64)
-        t = CuckooTable.from_bytes(int(row["m"]), row["table"])
-        return cpdf.assign(_maybe_seen=t.contains(hashes))
-
-    flagged = (
-        cand.groupBy("_cuckoo_part")
-        .cogroup(
-            cuckoos.withColumnRenamed("partition_id", "_cuckoo_part").groupBy("_cuckoo_part")
-        )
-        .applyInPandas(probe, out_schema)
-        .drop("_cuckoo_part")
-        .persist()
-    )
-    definitely_new = flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-    # no .distinct(): left_anti is insensitive to right-side duplicates
-    # (see bloom.bloom_anti_join — same O(|seen|)-shuffle-per-round saving)
-    rescue = (
-        flagged.filter(F.col("_maybe_seen"))
-        .drop("_maybe_seen")
-        .join(seen.select(hash_col), hash_col, "left_anti")
-    )
-    out = definitely_new.unionByName(rescue)
-    _PERSISTED.append(flagged)
-    return out
-
-
-_PERSISTED: list[DataFrame] = []
-
-
-def release_persisted() -> None:
-    """Unpersist intermediates pinned by cuckoo_anti_join (mirrors
-    bloom.release_persisted / ranking.release_persisted — call once the
-    round's outputs are consumed; previously these leaked into bloom's
-    registry, which standalone cuckoo callers never release)."""
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()

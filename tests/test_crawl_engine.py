@@ -11,7 +11,7 @@ import pytest
 
 from hdx_metadata_crawler_spark.operators import ranking
 from hdx_metadata_crawler_spark.sources import synthetic
-from hdx_metadata_crawler_spark.streaming import bloom, simulator
+from hdx_metadata_crawler_spark.streaming import bloom, cuckoo, simulator
 from hdx_metadata_crawler_spark.streaming.frontier import CrawlConfig, CrawlEngine
 
 N_SEEDS = 150
@@ -265,19 +265,30 @@ def test_politeness_window_keeps_full_parallelism(spark):
     )
 
 
-def test_bloom_no_false_drops(spark):
-    """Bloom-positive candidates must be rescued by the exact join: the
+# (build, anti-join, update) per seen-filter kernel; both run the one
+# co-partitioned probe-and-rescue path in bloom.py.  update(filters, keys,
+# n_partitions=P) is the kernel's table-rewriting call (merge or remove).
+SEEN_FILTERS = {
+    "bloom": (bloom.build_blooms, bloom.bloom_anti_join, bloom.merge_blooms),
+    "cuckoo": (cuckoo.build_cuckoos, cuckoo.cuckoo_anti_join, cuckoo.cuckoo_remove),
+}
+
+
+@pytest.mark.parametrize("kernel", sorted(SEEN_FILTERS))
+def test_seen_filter_no_false_drops(spark, kernel):
+    """Filter-positive candidates must be rescued by the exact join: the
     composite anti-join equals a plain exact anti-join."""
     from pyspark.sql import functions as F
 
+    build, anti_join, _ = SEEN_FILTERS[kernel]
     urls = spark.createDataFrame(
         [(u,) for u in synthetic.seed_urls(2000)], ["canon_url"]
     ).select("canon_url", F.xxhash64("canon_url").alias("url_hash"))
     seen = urls.filter(F.col("url_hash") % 3 == 0)
-    blooms = bloom.build_blooms(seen, n_partitions=8)
+    filters = build(seen, n_partitions=8)
     got = {
         r["canon_url"]
-        for r in bloom.bloom_anti_join(urls, seen, blooms, n_partitions=8).collect()
+        for r in anti_join(urls, seen, filters, n_partitions=8).collect()
     }
     expected = {
         r["canon_url"]
@@ -425,22 +436,25 @@ def test_bloom_design_point_sizing():
     assert abs(floor_gb - 12.5) < 0.01
 
 
-def test_bloom_partition_count_mismatch_refuses(spark):
-    """Probing/merging with a different n_partitions than the table was
-    built with would silently bypass the filter for absent partitions —
-    it must raise instead (code-review finding: cross-call invariant)."""
+@pytest.mark.parametrize("kernel", sorted(SEEN_FILTERS))
+def test_seen_filter_partition_count_mismatch_refuses(spark, kernel):
+    """Probing/merging/removing with a different n_partitions than the
+    table was built with would silently bypass the filter for absent
+    partitions (or route removals to the wrong table) — it must raise
+    instead (code-review finding: cross-call invariant)."""
     from pyspark.sql import functions as F
 
+    build, anti_join, update = SEEN_FILTERS[kernel]
     urls = spark.createDataFrame(
         [(u,) for u in synthetic.seed_urls(200)], ["canon_url"]
     ).select("canon_url", F.xxhash64("canon_url").alias("url_hash"))
-    blooms = bloom.build_blooms(urls, n_partitions=8)
+    filters = build(urls, n_partitions=8)
     # the probe validates inside the co-partitioned task, so the mismatch
     # surfaces at action time (Spark wraps the ValueError in PythonException)
     with pytest.raises(Exception, match="n_partitions"):
-        bloom.bloom_anti_join(urls, urls, blooms, n_partitions=16).collect()
+        anti_join(urls, urls, filters, n_partitions=16).collect()
     with pytest.raises(ValueError, match="n_partitions"):
-        bloom.merge_blooms(blooms, urls, n_partitions=4)
+        update(filters, urls, n_partitions=4)
 
 
 def test_resume_ignores_tmp_dir_with_commit_marker(spark, tmp_path):

@@ -1,5 +1,6 @@
-"""Cuckoo-filter seen-set semantics: no-false-drop anti-join equivalence,
-delete support (the capability Bloom lacks), and local table invariants."""
+"""Cuckoo-filter seen-set semantics: data-sized tables, delete support (the
+capability Bloom lacks), and local table invariants.  The no-false-drop and
+n_partitions-mismatch contracts run on both kernels in test_crawl_engine.py."""
 
 from __future__ import annotations
 
@@ -42,13 +43,17 @@ def test_alt_bucket_involution():
     assert (back == b).all(), "alt(alt(b)) must equal b (partial-key hashing)"
 
 
-def test_cuckoo_anti_join_no_false_drops(spark):
-    urls = _urls_df(spark, 2000)
-    seen = urls.filter(F.col("url_hash") % 3 == 0)
-    filters = cuckoo.build_cuckoos(seen, n_partitions=8)
+def test_cuckoo_tables_sized_from_partition_key_count(spark):
+    """~9k keys in ONE partition: a table sized for a fixed per-partition
+    budget (2048 buckets x 4 slots) runs out of room near 7.9k keys; each
+    partition's table is sized from its own key count instead."""
+    urls = _urls_df(spark, 10000)
+    seen = urls.filter(F.col("url_hash") % 10 != 0)
+    assert seen.count() > 7872
+    filters = cuckoo.build_cuckoos(seen, n_partitions=1)
     got = {
         r["canon_url"]
-        for r in cuckoo.cuckoo_anti_join(urls, seen, filters, n_partitions=8).collect()
+        for r in cuckoo.cuckoo_anti_join(urls, seen, filters, n_partitions=1).collect()
     }
     expected = {
         r["canon_url"]

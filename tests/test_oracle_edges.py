@@ -6,12 +6,14 @@ and require exact agreement."""
 from __future__ import annotations
 
 import datetime
+import os
 import sys
 
 import duckdb
+import numpy as np
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entry  # noqa: E402
 
 
@@ -33,7 +35,7 @@ def _parity(spark, tmp_path, name, round_floats=4):
 
     spark_rows = norm([row.asDict() for row in out.collect()])
     con = duckdb.connect()
-    for t in ("events", "documents"):
+    for t in ("events", "documents", "embeddings"):
         p = tmp_path / f"{t}.parquet"
         if p.exists():
             con.sql(
@@ -98,3 +100,31 @@ def test_ngram_jaccard_null_text_parity(spark, tmp_path):
     _parity(spark, tmp_path, "ngram_jaccard_pairs")
     _parity(spark, tmp_path, "minhash_lsh_dedup")
     _parity(spark, tmp_path, "simhash_fingerprints")
+
+
+def test_cosine_gate_band_parity(spark, tmp_path):
+    """A pair whose raw cosine sits in [t - 0.00005, t) rounds up to t at
+    4 dp.  The kernels gate on the 4-dp value, so the oracles must too, or
+    Spark keeps the pair and DuckDB drops it.  One pair just under the
+    sweep's 0.30 floor, one just under the 0.40 near-dup threshold (the
+    second pair shares an LSH bucket, so cosine_neardup_lsh scores it)."""
+    dim = 64
+    basis = np.eye(dim)
+    vecs = []
+    for i, cos in enumerate((0.29997, 0.39997)):
+        a, b = basis[4 * i], basis[4 * i + 1]
+        vecs += [a, cos * a + np.sqrt(1.0 - cos * cos) * b]
+    vecs = np.asarray(vecs, dtype=np.float32).astype(np.float64)
+    unit = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
+    for i, t in enumerate((0.30, 0.40)):
+        cos = float(unit[2 * i] @ unit[2 * i + 1])
+        assert t - 0.00005 <= cos < t, cos
+    spark.createDataFrame(
+        [(i, [float(x) for x in v], 0) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>, label int",
+    ).coalesce(1).write.parquet(str(tmp_path / "embeddings.parquet"))
+    _parity(spark, tmp_path, "neardup_threshold_sweep")
+    _parity(spark, tmp_path, "cosine_neardup_exact")
+    _parity(spark, tmp_path, "cosine_neardup_lsh")
+    lsh = entry.queries()["cosine_neardup_lsh"](spark, str(tmp_path)).collect()
+    assert [(r["id_a"], r["id_b"]) for r in lsh] == [(2, 3)]

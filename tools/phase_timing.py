@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """Per-phase wall timing of the crawl-round bench dataflow at one core
-count — a diagnostic for the scaling gate, NOT a graded benchmark.  Each
-phase is materialized to a noop sink in sequence, so phase walls include
-that phase's work only (upstream phases are cached first).
+count — a diagnostic for the scaling gate, NOT a graded benchmark.  The
+inputs are bench.py's (``crawl_round_inputs``).  Each phase is
+materialized in sequence, so phase walls include that phase's work only
+(upstream phases are cached first).
 
 Usage: python tools/phase_timing.py --cores 32 [--n-urls 200000] [--body-scale 64]
 """
@@ -25,13 +26,10 @@ def main() -> int:
     args = ap.parse_args()
     os.environ["SPARK_GRAFT_BODY_SCALE"] = str(args.body_scale)
 
-    import pandas as pd
     import pyspark.sql.functions as F
-    from pyspark.sql.functions import pandas_udf
 
-    from hdx_metadata_crawler_spark.functions.url import url_hash
+    from bench import ROUND_TASKS, crawl_round_inputs
     from hdx_metadata_crawler_spark.session import get_spark
-    from hdx_metadata_crawler_spark.sources import synthetic
     from hdx_metadata_crawler_spark.streaming import bloom
     from hdx_metadata_crawler_spark.streaming.frontier import (
         _FETCH_SCHEMA,
@@ -44,30 +42,7 @@ def main() -> int:
         "phase-timing", master=f"local[{args.cores}]",
         shuffle_partitions=max(args.cores, 8),
     )
-    n_tasks = 128
-
-    @pandas_udf("string")
-    def seed_url_udf(seq: pd.Series) -> pd.Series:
-        return seq.map(synthetic.seed_url)
-
-    frontier = (
-        spark.range(args.n_urls, numPartitions=n_tasks)
-        .select(seed_url_udf(F.col("id")).alias("canon_url"))
-        .select(
-            "canon_url",
-            url_hash(F.col("canon_url")).alias("url_hash"),
-            F.regexp_extract("canon_url", r"^https?://([^/]+)", 1).alias("host"),
-            F.lit(0).alias("priority"),
-            F.lit(0).alias("depth"),
-            F.lit(0).alias("attempt"),
-        )
-    ).cache()
-    seen = frontier.filter(F.pmod("url_hash", F.lit(10)) < 3).select(
-        "url_hash", "canon_url"
-    ).cache()
-    frontier.count(); seen.count()
-    blooms = bloom.build_blooms(seen, n_partitions=128).cache()
-    blooms.count()
+    frontier, seen, blooms = crawl_round_inputs(spark, args.n_urls)
 
     # warmup (small) to pay codegen/python-worker startup outside the timers
     warm = politeness_slots(frontier.limit(2000), rps=2.0, n_salts=64)
@@ -78,7 +53,7 @@ def main() -> int:
 
     t = time.time()
     candidates = bloom.bloom_anti_join(
-        frontier, seen, blooms, n_partitions=128, mode="copartition"
+        frontier, seen, blooms, n_partitions=ROUND_TASKS
     ).cache()
     candidates.count()
     phases["probe"] = round(time.time() - t, 2)
@@ -90,7 +65,7 @@ def main() -> int:
 
     t = time.time()
     fetched = (
-        scheduled.repartition(n_tasks)
+        scheduled.repartition(ROUND_TASKS)
         .mapInPandas(_fetch_batches, _FETCH_SCHEMA)
         .withColumn("round", F.lit(0))
     ).cache()
